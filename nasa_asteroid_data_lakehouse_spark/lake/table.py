@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -103,6 +104,27 @@ class VersionedTable:
         for f in StructType.fromJson(schema_json).fields:
             if f.name != "__bucket" and f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+        return df
+
+    @staticmethod
+    def _cast_keys_to_schema(df: DataFrame, keys: list[str], manifest: dict) -> DataFrame:
+        """Cast ``df``'s key columns to the table's key types where they
+        differ.  ``xxhash64`` is type-sensitive: an int64 key hashed
+        against an int32 table lands in the wrong bucket (a delete then
+        misses its row; an upsert re-hashes the touched bucket's rows
+        into buckets it did not read and drops those buckets' rows).
+        Correctly typed frames come back unchanged, so their plans do
+        not move."""
+        from pyspark.sql.types import StructType
+
+        schema_json = manifest.get("schema")
+        if schema_json is None:
+            return df
+        table_types = {f.name: f.dataType for f in StructType.fromJson(schema_json).fields}
+        df_types = {f.name: f.dataType for f in df.schema.fields}
+        for k in keys:
+            if k in table_types and df_types.get(k, table_types[k]) != table_types[k]:
+                df = df.withColumn(k, F.col(k).cast(table_types[k]))
         return df
 
     def _walk_stream_markers(self, from_version: int) -> dict[str, int]:
@@ -446,7 +468,9 @@ class VersionedTable:
             # would otherwise BE the narrow incoming and the commit
             # would silently drop table columns from the manifest
             # schema.
-            incoming = self._align_to_schema(incoming, manifest)
+            incoming = self._cast_keys_to_schema(
+                self._align_to_schema(incoming, manifest), keys, manifest
+            )
 
             inc_bucketed = incoming.withColumn(
                 "__bucket",
@@ -767,8 +791,6 @@ class VersionedTable:
         ``extra_meta`` merges into the commit manifest (the idempotent
         streaming marker hook, as on :meth:`upsert`) — a CDC apply can
         make its delete half carry the batch marker."""
-        from pyspark.sql.types import StructType
-
         for _ in range(retries):
             version = self.latest_version()
             if version is None:
@@ -776,26 +798,10 @@ class VersionedTable:
             manifest = self._load_manifest(version)
             keys = manifest["keys"]
             self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
-            # Cast the caller's key columns to the TABLE's key types
-            # before bucket-hashing: xxhash64 is type-sensitive, so a
-            # mistyped frame (int32 keys for a bigint table) would file
-            # its vectors under the wrong buckets and the per-bucket
-            # subtraction would silently MISS the delete.
-            key_cols = [F.col(k) for k in keys]
-            schema_json = manifest.get("schema")
-            if schema_json is not None:
-                by_name = {
-                    f.name: f for f in StructType.fromJson(schema_json).fields
-                }
-                key_cols = [
-                    F.col(k).cast(by_name[k].dataType).alias(k)
-                    if k in by_name
-                    else F.col(k)
-                    for k in keys
-                ]
-            dv_new = self._write_bucket_files(
-                keys_df.select(*key_cols).distinct(), keys
-            )
+            # The vectors are hash-bucketed like the data, so the key
+            # types must be the table's (see _cast_keys_to_schema).
+            key_frame = self._cast_keys_to_schema(keys_df.select(*keys), keys, manifest)
+            dv_new = self._write_bucket_files(key_frame.distinct(), keys)
             if not dv_new:
                 return version  # empty key set: no-op, no commit spam
             merged_dvs = {
@@ -992,7 +998,10 @@ class VersionedTable:
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Delete data files unreferenced by the ``keep_last`` newest
-        manifests (and drop older manifests).  Returns removed files."""
+        manifests (and drop older manifests), then every txn dir that no
+        longer holds a data file.  Txn dirs of writes still in flight (a
+        ``_temporary`` or ``.spark-staging-*`` subdir) are left alone.
+        Returns removed files."""
         latest = self.latest_version()
         if latest is None:
             return []
@@ -1007,15 +1016,23 @@ class VersionedTable:
         removed = []
         for txn in os.listdir(self._data_dir):
             txn_dir = os.path.join(self._data_dir, txn)
-            for entry in os.listdir(txn_dir):
-                bucket_dir = os.path.join(txn_dir, entry)
-                if not os.path.isdir(bucket_dir):
-                    continue
-                for f in os.listdir(bucket_dir):
-                    path = os.path.join(bucket_dir, f)
-                    if path.endswith(".parquet") and path not in referenced:
+            if any(e == "_temporary" or e.startswith(".spark-staging")
+                   for e in os.listdir(txn_dir)):
+                continue  # a write still in flight
+            kept = False
+            for dirpath, _dirs, files in os.walk(txn_dir):
+                for f in files:
+                    path = os.path.join(dirpath, f)
+                    if not path.endswith(".parquet"):
+                        continue
+                    if path in referenced:
+                        kept = True
+                    else:
                         os.remove(path)
                         removed.append(path)
+            if not kept:
+                # only the writer's _SUCCESS / .crc residue is left
+                shutil.rmtree(txn_dir)
         for v in range(0, latest - keep_last + 1):
             p = self._manifest_path(v)
             if os.path.exists(p):

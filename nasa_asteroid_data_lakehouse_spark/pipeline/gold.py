@@ -8,13 +8,19 @@ key columns.  Divergences (intentional, SURVEY.md §7):
 * dims dedup on their business key (the reference's all-column
   ``dropDuplicates`` only works because its input is one day);
 * upserts use the deterministic incoming-wins merge instead of
-  arbitrary-survivor dropDuplicates.
+  arbitrary-survivor dropDuplicates;
+* the four tables are merged concurrently (``build_gold``), since no
+  table reads another.
 """
 
 from __future__ import annotations
 
+import functools
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from nasa_asteroid_data_lakehouse_spark.functions.dates import (
     NEOWS_TS_FORMAT,
@@ -116,32 +122,76 @@ GOLD_TABLES = {
 }
 
 
+def _merge_gold_table(
+    spark: SparkSession,
+    silver: DataFrame,
+    lake_root: str,
+    table_format: str,
+    name: str,
+) -> str:
+    """Build one gold table from ``silver`` and upsert it; returns its path."""
+    builder, keys = GOLD_TABLES[name]
+    path = f"{lake_root}/gold/{name}"
+    df = builder(silver)
+    if table_format == "versioned":
+        from nasa_asteroid_data_lakehouse_spark.lake import VersionedTable
+
+        table = VersionedTable(spark, path)
+        if table.latest_version() is None:
+            table.create(df, keys=keys)
+        else:
+            table.upsert(df)
+    else:
+        save_or_update_table(spark, df, path, keys)
+    return path
+
+
+def _with_caller_properties(spark: SparkSession, fn):
+    """``fn`` wrapped to run with a copy of the calling thread's Spark
+    local properties (job group, description, scheduler pool).  Each
+    call takes its own copy: ``inheritable_thread_target`` hands one
+    copy to every run of a wrapper, so a property one merge set would
+    show in its siblings' jobs.  With pinned-thread mode off it returns
+    the session itself, and there is nothing to inherit."""
+    wrap = inheritable_thread_target(spark)
+    return wrap(fn) if callable(wrap) else fn
+
+
 def build_gold(
     spark: SparkSession,
     silver: DataFrame,
     lake_root: str,
     table_format: str = "parquet",
 ) -> dict[str, str]:
-    """Build + upsert all four gold tables; returns name -> path.
+    """Build + upsert all four gold tables concurrently; returns name -> path.
+
+    No gold table reads another (the fact recomputes its SKs from
+    natural keys), so the four merges are submitted at once from a
+    thread pool with one worker per table.  Each merge spends much of
+    its wall time outside Spark jobs (planning, the commit, the staged
+    swap); running them together overlaps that fixed cost and lets the
+    small jobs share the executor cores.  The thread target is wrapped
+    with ``inheritable_thread_target``, so the workers' jobs carry the
+    caller's job group and local properties.
+
+    Returns only when every table has finished.  If any failed, the
+    first failure in ``GOLD_TABLES`` order is re-raised; the tables that
+    finished stay committed, and a failed parquet merge leaves no
+    ``__staging_*`` / ``__old_*`` dir (the ``staged_swap`` contract).
 
     ``table_format="versioned"`` uses the manifest-based
     ``lake.VersionedTable`` instead of plain-parquet overwrite: snapshot
     isolation, time travel, and bucket-pruned upserts (only buckets
     containing incoming keys are rewritten).
     """
-    out = {}
-    for name, (builder, keys) in GOLD_TABLES.items():
-        path = f"{lake_root}/gold/{name}"
-        df = builder(silver)
-        if table_format == "versioned":
-            from nasa_asteroid_data_lakehouse_spark.lake import VersionedTable
-
-            table = VersionedTable(spark, path)
-            if table.latest_version() is None:
-                table.create(df, keys=keys)
-            else:
-                table.upsert(df)
-        else:
-            save_or_update_table(spark, df, path, keys)
-        out[name] = path
-    return out
+    merge_one = functools.partial(_merge_gold_table, spark, silver, lake_root, table_format)
+    with ThreadPoolExecutor(max_workers=len(GOLD_TABLES)) as pool:
+        futures = {
+            name: pool.submit(_with_caller_properties(spark, merge_one), name)
+            for name in GOLD_TABLES
+        }
+    for future in futures.values():
+        error = future.exception()
+        if error is not None:
+            raise error
+    return {name: future.result() for name, future in futures.items()}

@@ -2,15 +2,24 @@
 (SURVEY.md §1.3-1.4 schemas, FIXTURES.md §B edge cases)."""
 
 import hashlib
+import os
+import threading
+import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from nasa_asteroid_data_lakehouse_spark.lake import VersionedTable
+from nasa_asteroid_data_lakehouse_spark.operators.merge import save_or_update_table
+from nasa_asteroid_data_lakehouse_spark.pipeline import gold
 from nasa_asteroid_data_lakehouse_spark.pipeline.gold import (
+    GOLD_TABLES,
     build_dim_approach_date,
     build_dim_asteroid,
     build_dim_orbiting_body,
     build_fact,
+    build_gold,
 )
 from nasa_asteroid_data_lakehouse_spark.pipeline.runner import run_pipeline
 from nasa_asteroid_data_lakehouse_spark.pipeline.silver import (
@@ -136,3 +145,124 @@ def test_full_pipeline_two_days_idempotent(spark, tmp_path):
     assert dim_asteroid2.count() == 3
     empty_name = dim_asteroid2.where(F.col("id") == 54016476).collect()[0]
     assert empty_name["name"] is None  # "" -> null survived the merge
+
+
+# --- concurrent gold merges ------------------------------------------------------
+
+
+DAYS = [(DAY1, DOC_DAY1), (DAY2, DOC_DAY2), (DAY2, DOC_DAY2)]  # day 2 twice: a rerun
+
+
+def _silver_for(spark, root, day, doc):
+    return build_silver(spark, ingest_document(root, day, doc), dates=[day])
+
+
+def _serial_gold(spark, silver, lake_root, table_format):
+    """Reference: the four gold tables built and merged one after another."""
+    for name, (builder, keys) in GOLD_TABLES.items():
+        path = f"{lake_root}/gold/{name}"
+        df = builder(silver)
+        if table_format == "versioned":
+            table = VersionedTable(spark, path)
+            if table.latest_version() is None:
+                table.create(df, keys=keys)
+            else:
+                table.upsert(df)
+        else:
+            save_or_update_table(spark, df, path, keys)
+
+
+def _read_gold(spark, path, table_format):
+    if table_format == "versioned":
+        return VersionedTable(spark, path).read()
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("table_format", ["parquet", "versioned"])
+def test_concurrent_gold_matches_serial_reference(spark, tmp_path, table_format):
+    """The concurrent build_gold leaves the same gold, row for row, as a
+    serial build after every day: day 1, day 2 and a rerun of day 2."""
+    bronze, concurrent, serial = (str(tmp_path / d) for d in ("bronze", "concurrent", "serial"))
+    for day, doc in DAYS:
+        silver = _silver_for(spark, bronze, day, doc)
+        paths = build_gold(spark, silver, concurrent, table_format=table_format)
+        _serial_gold(spark, silver, serial, table_format)
+        assert list(paths) == list(GOLD_TABLES)
+        for name, path in paths.items():
+            got = _read_gold(spark, path, table_format)
+            want = _read_gold(spark, f"{serial}/gold/{name}", table_format)
+            assert sorted(got.dtypes) == sorted(want.dtypes), name
+            cols = sorted(got.columns)
+            got_rows = Counter(tuple(r) for r in got.select(cols).collect())
+            want_rows = Counter(tuple(r) for r in want.select(cols).collect())
+            assert got_rows == want_rows, (day, name)
+
+
+def test_gold_failure_reraised_after_other_tables_finish(spark, tmp_path, monkeypatch):
+    """One table's merge fails inside its staged write.  build_gold waits
+    for the other three, which commit, then re-raises the failure; the
+    failed table keeps its previous content and no swap dir is left."""
+    root = str(tmp_path / "lake")
+    build_gold(spark, _silver_for(spark, root, DAY1, DOC_DAY1), root)
+    before = spark.read.parquet(f"{root}/gold/dim_orbiting_body").count()
+
+    real_merge = gold.save_or_update_table
+    failed = threading.Event()
+    finished = []
+
+    def flaky_merge(spark_, df, path, keys):
+        name = os.path.basename(path)
+        if name == "dim_orbiting_body":
+            try:
+                boom = F.raise_error(F.lit("injected merge failure")).cast("string")
+                real_merge(spark_, df.withColumn("boom", boom), path, keys)
+            finally:
+                failed.set()
+        else:
+            # the other tables finish only after the failure has happened
+            assert failed.wait(timeout=120)
+            real_merge(spark_, df, path, keys)
+            finished.append(name)
+
+    monkeypatch.setattr(gold, "save_or_update_table", flaky_merge)
+    with pytest.raises(Exception, match="injected merge failure"):
+        build_gold(spark, _silver_for(spark, root, DAY2, DOC_DAY2), root)
+
+    assert sorted(finished) == ["dim_approach_date", "dim_asteroid", "fact_asteroid_approach"]
+    leftovers = [d for d in os.listdir(f"{root}/gold") if "__staging_" in d or "__old_" in d]
+    assert leftovers == []
+    assert spark.read.parquet(f"{root}/gold/dim_orbiting_body").count() == before
+    # the finished tables hold day 2 merged over day 1
+    assert spark.read.parquet(f"{root}/gold/fact_asteroid_approach").count() == 5
+    assert spark.read.parquet(f"{root}/gold/dim_asteroid").count() == 3
+
+
+def test_daily_run_jobs_carry_callers_job_group(spark, tmp_path, monkeypatch):
+    """A daily run over existing gold submits 16 Spark jobs, all under
+    the caller's job group: the gold merges' worker threads inherit it,
+    and the silver re-read runs no schema-inference job.  Each worker
+    holds its own copy of the properties: a description one merge sets
+    does not leak into the others."""
+    root = str(tmp_path / "lake")
+    run_pipeline(spark, root, DAY1, DOC_DAY1)
+    sc = spark.sparkContext
+    real_merge = gold.save_or_update_table
+    seen = {}
+
+    def labelled_merge(spark_, df, path, keys):
+        name = os.path.basename(path)
+        sc.setLocalProperty("spark.job.description", name)
+        real_merge(spark_, df, path, keys)
+        seen[name] = (sc.getLocalProperty("spark.jobGroup.id"),
+                      sc.getLocalProperty("spark.job.description"))
+
+    monkeypatch.setattr(gold, "save_or_update_table", labelled_merge)
+    group = f"daily-run-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "one daily run")
+    try:
+        run_pipeline(spark, root, DAY2, DOC_DAY2)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 16
+    assert seen == {name: (group, name) for name in GOLD_TABLES}

@@ -1210,6 +1210,48 @@ def test_delete_keys_casts_to_table_key_types(spark, table):
     assert got.where(F.col("k").isin([3, 17])).count() == 0
 
 
+def test_upsert_casts_to_table_key_types(spark, tmp_path):
+    """xxhash64 is type-sensitive: a bigint-keyed batch against an
+    int-keyed table must hash into the table's buckets.  Unfixed, the
+    touched bucket's rows were re-hashed as bigint into other bucket
+    ids, and the commit replaced those buckets' file lists with them,
+    dropping every untouched bucket's rows (2,000 -> a few hundred)."""
+    t = VersionedTable(spark, str(tmp_path / "t32"), num_buckets=16)
+    t.create(
+        spark.createDataFrame([(i, f"v{i}") for i in range(2000)], "k int, val string"),
+        keys=["k"],
+    )
+    incoming = spark.createDataFrame([(7, "NEW7"), (5000, "v5000")], "k bigint, val string")
+    v = t.upsert(incoming)
+    got = t.read()
+    assert got.count() == 2001
+    assert got.select("k").distinct().count() == 2001
+    assert dict(got.dtypes)["k"] == "int"
+    assert got.where(F.col("k") == 7).first()["val"] == "NEW7"
+    # only the buckets the two keys hash to were rewritten
+    assert len(t._load_manifest(v)["touched_buckets"]) <= 2
+
+
+def test_vacuum_removes_emptied_txn_dirs(spark, table):
+    """After compact + vacuum no txn dir is left without a data file:
+    vacuum drops the dirs it empties, Spark's _SUCCESS / .crc residue
+    included, and keeps every dir the snapshot still reads."""
+    for i in range(3):
+        table.upsert(spark.createDataFrame([(i, f"u{i}", 0.0)], ["k", "val", "m"]))
+    table.delete_keys(spark.createDataFrame([(50,)], "k bigint"))
+    table.compact()
+    table.vacuum(keep_last=1)
+    data_dir = os.path.join(table.root, "data")
+    txn_dirs = os.listdir(data_dir)
+    assert txn_dirs
+    for txn in txn_dirs:
+        files = [f for _p, _d, fs in os.walk(os.path.join(data_dir, txn)) for f in fs]
+        assert any(f.endswith(".parquet") for f in files), (txn, files)
+    got = table.read()
+    assert got.count() == 99
+    assert got.where(F.col("k") == 2).first()["val"] == "u2"
+
+
 def test_concurrent_writers_serialize_via_optimistic_retry(spark, tmp_path):
     """LIVE concurrency (not a simulated conflict): four threads upsert
     disjoint key ranges simultaneously; the put-if-absent manifest
